@@ -183,14 +183,15 @@ def test_registry_plan_hygiene(spark):
        until it is either day-sharded (operators/windows.py sharded_gaps)
        or audited into BOUNDED_WINDOW_OK with its boundedness argument.
     """
-    py_off, cart_off, win_off = [], [], []
+    py_off, cart_off, win_off, unbuilt = [], [], [], []
     for name, q in sorted(REGISTRY.items()):
         if name in HEAVY_EXECUTING:
             continue
         try:
             plan = _plan(q.spark(spark, SF_DIR))
-        except Exception:
-            continue  # iterative/stateful plans may need an action; skip
+        except Exception as e:  # a plan that cannot build escapes all lints
+            unbuilt.append(f"{name}: {type(e).__name__}")
+            continue
         if name not in PYTHON_OK and (
             "BatchEvalPython" in plan or "ArrowEvalPython" in plan
         ):
@@ -201,6 +202,7 @@ def test_registry_plan_hygiene(spark):
             plan
         ):
             win_off.append(name)
+    assert unbuilt == [], f"plans that failed to build: {unbuilt}"
     assert py_off == [], f"python in relational path: {py_off}"
     assert cart_off == [], f"cartesian product: {cart_off}"
     assert win_off == [], f"corpus-scaled single-partition window: {win_off}"

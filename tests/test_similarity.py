@@ -146,25 +146,75 @@ def test_pq_topk_recall_vs_exact_l2(spark):
     assert min(recalls) >= 0.2
 
 
-def test_pq_encode_literal_path_matches_join_path(spark):
-    """Round-12 literal-codebook encode must emit bit-identical codes to
-    the broadcast-join path it replaced (same _d2 arithmetic, same 4dp
-    round, same (d, j) array_min tie-break)."""
+def _round_half_up(x: float, nd: int) -> float:
+    """Spark ``round`` on a double: BigDecimal of the shortest decimal
+    string, HALF_UP at ``nd`` places."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-nd), ROUND_HALF_UP))
+
+
+def test_pq_encode_matches_python_reference(spark):
+    """Golden check of ``pq_encode``: per subspace, codes are the
+    argmin over seed codewords (j = rank of the seed's vec_id) of the
+    squared L2 distance summed in order from 0.0 and rounded half-up to
+    4dp, ties to the smallest codeword id."""
+    import pyspark.sql.functions as F
+
+    from synth_transform_spark.operators import similarity
+    from synth_transform_spark.sources.readers import load_table
+
+    m, n_codes, dim = similarity.PQ_M, similarity.PQ_CODES, 64
+    sub = dim // m
+    emb = load_table(spark, SF_DIR, "embeddings")
+    seeds = emb.filter(F.col("vec_id") < n_codes)
+    got = {
+        r["vec_id"]: list(r["codes"])
+        for r in similarity.pq_encode(emb, similarity.pq_pack_codebook(seeds)).collect()
+    }
+
+    vecs = {r["vec_id"]: [float(x) for x in r["embedding"]] for r in emb.collect()}
+    book = [vecs[i] for i in sorted(i for i in vecs if i < n_codes)]
+
+    def d2(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += (x - y) * (x - y)
+        return acc
+
+    def encode(v):
+        codes = []
+        for mi in range(m):
+            sv = v[mi * sub : (mi + 1) * sub]
+            scored = [
+                (_round_half_up(d2(sv, c[mi * sub : (mi + 1) * sub]), 4), j)
+                for j, c in enumerate(book)
+            ]
+            codes.append(min(scored)[1])
+        return codes
+
+    assert len(book) == n_codes
+    assert got == {vid: encode(v) for vid, v in vecs.items()}
+
+
+def test_pq_topk_builds_without_jobs(spark):
+    """Building the q132 operator is pure plan construction: the codebook
+    rides a broadcast join, so no Spark job runs until an action."""
+    import uuid
+
     import pyspark.sql.functions as F
 
     from synth_transform_spark.operators import similarity
     from synth_transform_spark.sources.readers import load_table
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    seeds = emb.filter(F.col("vec_id") < similarity.PQ_CODES)
-    cb = similarity.pq_pack_codebook(seeds)
-    packed = cb.collect()[0]["_cb"]
-    assert all(
-        [c["j"] for c in sub_cb] == list(range(len(sub_cb))) for sub_cb in packed
-    )
-    rows = [[list(c["cvec"]) for c in sub_cb] for sub_cb in packed]
-    joined = similarity.pq_encode(emb, cb)
-    lit = similarity.pq_encode(emb, None, codebook_rows=rows)
-    j = {r[0]: list(r[1]) for r in joined.collect()}
-    l = {r[0]: list(r[1]) for r in lit.collect()}
-    assert j == l and len(j) > 0
+    queries = emb.filter(F.col("vec_id") < 3)
+    sc = spark.sparkContext
+    group = f"pq-topk-build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "pq_topk build")
+    try:
+        similarity.pq_topk(emb, queries, k=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
