@@ -277,24 +277,12 @@ def tokenize_notebook_pos_approx(text: str | None) -> list[str]:
     return [porter_stem(t_) for t_ in t.split() if pos_keep_approx(t_)]
 
 
-def tokens_pos_approx_udf():
-    """pandas UDF: notebook cleaning + POS approximation + Porter."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, StringType
-
-    @pandas_udf(ArrayType(StringType()))
-    def _tok(s: pd.Series) -> pd.Series:
-        return s.map(tokenize_notebook_pos_approx)
-
-    return _tok
-
-
 def pos_filtered_tokens_col(text_col):
-    """JVM-side Column twin of the approximation for relational paths:
-    the stoplists are literal arrays inside whole-stage codegen — no
-    Python worker. Porter stemming is NOT applied here (the stemmer is
-    the declared Python stage); compose with the UDFs when stems are
-    needed."""
+    """The approximation as a JVM-side Column, its one Spark form: the
+    stoplists are literal arrays inside whole-stage codegen — no Python
+    worker. Porter stemming is NOT applied here (the stemmer is the
+    declared Python stage; ``tokenize_notebook_pos_approx`` is the
+    per-string reference including it)."""
     import pyspark.sql.functions as F
 
     cleaned = F.regexp_replace(F.lower(text_col), r"[^a-z\- ]", " ")

@@ -51,6 +51,8 @@ from dataclasses import dataclass
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from .text_analysis import tokens_raw
+
 
 @dataclass(frozen=True)
 class BpeResult:
@@ -196,9 +198,7 @@ def unigram_viterbi(
 
     words = (
         docs.select(
-            F.explode(
-                F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-            ).alias("word")
+            F.explode(tokens_raw(F.col(text_col))).alias("word")
         )
         .filter(F.length("word") <= max_word_len)
         .groupBy("word")

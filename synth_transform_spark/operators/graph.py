@@ -161,6 +161,28 @@ def pagerank(
     e = edges.select(
         F.col(src_col).alias("s"), F.col(dst_col).alias("d")
     ).localCheckpoint(eager=True)
+    outdeg = e.groupBy("s").agg(F.count(F.lit(1)).alias("od"))
+    weighted = e.join(outdeg, "s")  # (s, d, od)
+    return _rank_rounds(
+        e, weighted, F.col("rank") / F.col("od"), n_iter, damping
+    )
+
+
+def _rank_rounds(
+    e: DataFrame,
+    per_edge: DataFrame,
+    contribution,
+    n_iter: int,
+    damping: float,
+) -> DataFrame:
+    """The fixed-round PageRank loop shared by ``pagerank`` and
+    ``weighted_pagerank``: (node, rank).
+
+    ``e`` is the checkpointed (s, d, …) edge list the node set comes from;
+    ``per_edge`` is the lazy (s, d, coefficient) relation, checkpointed here
+    after the node count; ``contribution`` is the Column each edge sends
+    to ``d`` from the joined ``rank`` of ``s``.
+    """
     nodes = (
         e.select(F.col("s").alias("node"))
         .union(e.select(F.col("d").alias("node")))
@@ -168,15 +190,13 @@ def pagerank(
         .localCheckpoint(eager=True)
     )
     n = nodes.count()
-    outdeg = e.groupBy("s").agg(F.count(F.lit(1)).alias("od"))
-    weighted = e.join(outdeg, "s").localCheckpoint(eager=True)  # (s, d, od)
-
+    per_edge = per_edge.localCheckpoint(eager=True)
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     base = (1.0 - damping) / n
     for _ in range(n_iter):
         contrib = (
-            weighted.join(ranks, weighted["s"] == ranks["node"])
-            .select(F.col("d"), (F.col("rank") / F.col("od")).alias("c"))
+            per_edge.join(ranks, per_edge["s"] == ranks["node"])
+            .select(F.col("d"), contribution.alias("c"))
             .groupBy("d")
             .agg(F.sum("c").alias("in_sum"))
         )
@@ -309,39 +329,13 @@ def weighted_pagerank(
     e = edges.select(
         F.col(src_col).alias("s"), F.col(dst_col).alias("d"), F.col(weight_col).alias("w")
     ).localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("s").alias("node"))
-        .union(e.select(F.col("d").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
     outw = e.groupBy("s").agg(F.sum("w").alias("tw"))
-    shared = (
-        e.join(outw, "s")
-        .select("s", "d", F.round(F.col("w") / F.col("tw"), 6).alias("share"))
-        .localCheckpoint(eager=True)
+    shared = e.join(outw, "s").select(
+        "s", "d", F.round(F.col("w") / F.col("tw"), 6).alias("share")
     )
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    base = (1.0 - damping) / n
-    for _ in range(n_iter):
-        contrib = (
-            shared.join(ranks, shared["s"] == ranks["node"])
-            .select(F.col("d"), (F.col("rank") * F.col("share")).alias("c"))
-            .groupBy("d")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        ranks = (
-            nodes.join(contrib, nodes["node"] == contrib["d"], "left")
-            .select(
-                "node",
-                (
-                    F.lit(base) + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks
+    return _rank_rounds(
+        e, shared, F.col("rank") * F.col("share"), n_iter, damping
+    )
 
 
 def bfs_distances(

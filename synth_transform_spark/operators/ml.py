@@ -329,34 +329,6 @@ def outlier_top_tokens(
     )
 
 
-def pca_project(
-    vectors: DataFrame,
-    k: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Project array<float> embeddings onto their top-k principal components
-    (classifiers.ipynb cells 16-18 use PCA the same way, for 2-D structure
-    inspection of the TF-IDF space).
-
-    Spark ML PCA computes the covariance eigenbasis distributed (one pass +
-    a k x d driver-side SVD — d is the embedding width, not the row count,
-    so this holds at 100 TB). Output: (id, pc array<double> of length k).
-    Component SIGN is basis-dependent — consumers should compare absolute
-    loadings or fix signs downstream (documented, matches sklearn caveat).
-    """
-    from pyspark.ml.feature import PCA
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    vecs = vectors.select(
-        F.col(id_col), array_to_vector(F.col(vec_col).cast("array<double>")).alias("v")
-    )
-    model = PCA(k=k, inputCol="v", outputCol="pc_vec").fit(vecs)
-    return model.transform(vecs).select(
-        F.col(id_col), vector_to_array(F.col("pc_vec")).alias("pc")
-    )
-
-
 def _iround(y: float) -> int:
     """Round-half-away-from-zero to int — the ROUND(x) semantics shared by
     Spark (BigDecimal HALF_UP) and DuckDB (std::round) when rounding a

@@ -9,7 +9,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators import dedup
+from ..operators import dedup, text_analysis
 from ..sources.readers import load_table
 from .registry import register
 
@@ -152,8 +152,8 @@ def q32_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    return dedup.jaccard_verify(
-        pairs.select("id_a", "id_b"), sh, threshold=0.5
+    return dedup.jaccard_verify_arrays(
+        pairs.select("id_a", "id_b"), dedup.shingle_arrays(docs), threshold=0.5
     )
 
 
@@ -835,7 +835,7 @@ def q207_incremental_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # curation uses containment to drop the CONTAINED side. Exact
 # shared-shingle baseline like q32 — candidate space is every pair sharing
 # ≥1 shingle, the small-scale truth the LSH path (q27 candidates +
-# containment verify instead of jaccard_verify) approximates at 100 TB.
+# containment verify instead of jaccard_verify_arrays) approximates at 100 TB.
 # --------------------------------------------------------------------------
 _CONTAIN_T = 0.7
 
@@ -994,7 +994,7 @@ def q261_kmv_source_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    w = F.filter(F.split("text", " "), lambda t: t != "")
+    w = text_analysis.tokens_raw("text")
     sh = (
         docs.select("source", w.alias("w"))
         .filter(F.size("w") >= 3)
@@ -1259,8 +1259,6 @@ def q365_weighted_jaccard_sources(spark: SparkSession, sf_dir: str) -> DataFrame
     (source_a, source_b, smin, smax, weighted_jaccard)."""
     import pyspark.sql.functions as F
 
-    from ..operators import text_analysis
-
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "source",
@@ -1375,7 +1373,6 @@ def q383_double_sweep_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     from ..operators import graph
-    from ..sources.readers import load_table as _lt
 
     li = load_table(spark, sf_dir, "lineitem")
     items = li.select("l_orderkey", "l_partkey").distinct()
@@ -1483,9 +1480,7 @@ def q496_canonical_doc_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters = graph.duplicate_clusters(pairs)  # (doc_id, cluster_id, size)
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.filter(F.split(F.col("text"), " "), lambda t: t != "")
-        ).alias("tok"),
+        F.explode(text_analysis.tokens_raw(F.col("text"))).alias("tok"),
     )
     rich = toks.groupBy("doc_id").agg(
         F.countDistinct("tok").alias("nd")

@@ -20,10 +20,6 @@ from ..sources.readers import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --------------------------------------------------------------------------
 # q01 — TPC-H Q1 shape: scan → filter → groupBy → multi-agg (S1, P10, A1).
 # --------------------------------------------------------------------------
@@ -45,7 +41,7 @@ GROUP BY l_returnflag, l_linestatus
     bench=True,
 )
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1999-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -89,8 +85,8 @@ JOIN (
     bench=True,
 )
 def q02_multi_access_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
     agg = orders.groupBy("o_custkey").agg(
         F.countDistinct("o_orderkey").alias("n_orders"),
         F.round(F.sum("o_totalprice"), 4).alias("total_price"),
@@ -142,7 +138,7 @@ FROM st JOIN md ON md.l_orderkey = st.l_orderkey
     bench=True,
 )
 def q03_score_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     return stats.grouped_stats(li, ["l_orderkey"], "l_quantity")
 
 
@@ -167,10 +163,10 @@ GROUP BY ROLLUP (r_name, n_name)
     bench=True,
 )
 def q07_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    li = load_table(spark, sf_dir, "lineitem")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     j = (
         li.join(F.broadcast(supp), F.col("s_suppkey") == F.col("l_suppkey"))
         .join(F.broadcast(nation), F.col("n_nationkey") == F.col("s_nationkey"))
@@ -213,9 +209,9 @@ GROUP BY p_brand, s_name
     bench=True,
 )
 def q08_dim_denorm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_size") >= 25)
-    supp = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_size") >= 25)
+    supp = load_table(spark, sf_dir, "supplier")
     return (
         li.join(F.broadcast(part), F.col("p_partkey") == F.col("l_partkey"))
         .join(F.broadcast(supp), F.col("s_suppkey") == F.col("l_suppkey"))
@@ -245,8 +241,8 @@ WHERE EXISTS (
     tags=("P4",),
 )
 def q09_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 48)
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 48)
     return orders.join(
         li, orders.o_orderkey == li.l_orderkey, "left_semi"
     ).select("o_orderkey", "o_totalprice")
@@ -268,8 +264,8 @@ WHERE NOT EXISTS (
     tags=("P5", "U3"),
 )
 def q10_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     return customer.join(
         orders, customer.c_custkey == orders.o_custkey, "left_anti"
     ).select(
@@ -296,7 +292,7 @@ WHERE pos = 2
     tags=("J15", "W2"),
 )
 def q11_positional_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return (
         orders.withColumn("pos", F.row_number().over(w))
@@ -323,7 +319,7 @@ FROM orders
     bench=True,
 )
 def q12_surrogate_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").select("o_orderdate", "o_orderkey")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderdate", "o_orderkey")
     return ids.assign_ids_scalable(orders, ["o_orderdate", "o_orderkey"]).select(
         "new_id", "o_orderkey"
     )
@@ -347,8 +343,8 @@ WHERE rk = 1
     tags=("W3", "O3", "J1"),
 )
 def q13_argmax_tiebreak(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    customer = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
     j = customer.join(F.broadcast(nation), F.col("n_nationkey") == F.col("c_nationkey"))
     w = Window.partitionBy("n_name").orderBy(F.desc("c_acctbal"), F.asc("c_custkey"))
     return (
@@ -377,7 +373,7 @@ WHERE ABS(z_score) > 1.5
     tags=("W4", "P12"),
 )
 def q14_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return windows.zscore_outliers(orders, "o_totalprice", ["o_orderkey"], 1.5)
 
 
@@ -395,7 +391,7 @@ LIMIT 15
     tags=("O6",),
 )
 def q15_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
         .limit(15)
@@ -425,7 +421,7 @@ GROUP BY synth_round
     tags=("U1",),
 )
 def q16_union_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     parts = [
         orders.filter(F.col("o_orderkey") % 4 == r)
         .withColumn("synth_round", F.lit(r + 1))
@@ -461,7 +457,7 @@ FROM part
     tags=("F1", "F2", "F9", "F19"),
 )
 def q17_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     return part.select(
         "p_partkey",
         F.upper("p_name").alias("up_name"),
@@ -490,7 +486,7 @@ GROUP BY order_year, order_month
     tags=("F3", "F5", "A1"),
 )
 def q18_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.withColumn("order_year", F.year("o_orderdate"))
         .withColumn("order_month", F.month("o_orderdate"))
@@ -521,7 +517,7 @@ WHERE LEVENSHTEIN(a.p_name, b.p_name) <= 4
     tags=("J13", "F15"),
 )
 def q20_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_name")
+    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_name")
     a = part.select(
         F.col("p_partkey").alias("key_a"),
         F.col("p_brand").alias("brand_a"),
@@ -599,7 +595,7 @@ def q54_partial_ratio_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-block quadratics stay bounded — cardinality-25 keys would skew."""
     from ..functions.fuzzy import partial_ratio_window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     titles = docs.select(
         F.col("doc_id").alias("id_a"),
         (F.col("doc_id") % 25).alias("blk"),
@@ -640,7 +636,7 @@ GROUP BY o_orderpriority
     tags=("F25", "A7"),
 )
 def q29_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     pivoted = (
         orders.groupBy("o_orderpriority")
         .pivot("o_orderstatus", ["F", "O", "P"])
@@ -670,7 +666,7 @@ FROM orders
     tags=("W-frame",),
 )
 def q30_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -704,7 +700,7 @@ WHERE rk <= 20
     tags=("A13", "A10", "sampling"),
 )
 def q42_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("lang").orderBy(F.md5(F.col("doc_id").cast("string")), "doc_id")
     return (
         docs.withColumn("rk", F.row_number().over(w))
@@ -744,8 +740,8 @@ GROUP BY c_nationkey
     tags=("J4", "J5", "W1", "S11"),
 )
 def q43_translator_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     mapping = ids.assign_ids_scalable(
         cust.select("c_custkey", "c_nationkey"),
         order_cols=["c_nationkey", "c_custkey"],
@@ -792,10 +788,10 @@ LEFT JOIN supp_m s ON s.nation_key = n.n_nationkey
     tags=("J10", "J11", "F19", "J9"),
 )
 def q47_metric_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    supp = _t(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    supp = load_table(spark, sf_dir, "supplier")
     order_m = (
         orders.join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy(F.col("c_nationkey").alias("nation_key"))
@@ -845,7 +841,7 @@ GROUP BY l_returnflag, l_linestatus
     tags=("A12", "O6"),
 )
 def q64_group_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lin = _t(spark, sf_dir, "lineitem")
+    lin = load_table(spark, sf_dir, "lineitem")
     pct = F.expr("percentile(l_extendedprice, array(0.5D, 0.9D, 0.99D))")
     return lin.groupBy("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n"),
@@ -906,7 +902,7 @@ FROM est e JOIN ex ON ex.o_orderpriority = e.o_orderpriority
 def q71_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import sketches
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     est = sketches.hll_distinct(orders, ["o_orderpriority"], "o_custkey")
     exact = orders.groupBy("o_orderpriority").agg(
         F.count_distinct("o_custkey").cast("long").alias("exact_distinct")
@@ -947,7 +943,7 @@ FROM ranked WHERE sample_rank <= 20
 def q72_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import weighted_sample
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     out = weighted_sample(
         orders, ["o_orderpriority"], "o_orderkey", "o_totalprice", k=20
     )
@@ -986,7 +982,7 @@ FROM orders o JOIN b ON b.o_orderpriority = o.o_orderpriority
     tags=("A12", "P12", "training-prep"),
 )
 def q86_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     bounds = orders.groupBy("o_orderpriority").agg(
         F.expr("percentile(o_totalprice, 0.01D)").alias("p01"),
         F.expr("percentile(o_totalprice, 0.99D)").alias("p99"),
@@ -1036,7 +1032,7 @@ FROM orders
     tags=("scale-ops", "O1", "layout"),
 )
 def q90_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     x = (F.col("o_custkey") % 65536).cast("long")
     y = (
         F.datediff(F.col("o_orderdate"), F.lit("1995-01-01").cast("timestamp"))
@@ -1085,7 +1081,7 @@ FROM dev d JOIN mad m ON m.o_orderpriority = d.o_orderpriority
     tags=("A12", "W4", "training-prep"),
 )
 def q91_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     med = orders.groupBy("o_orderpriority").agg(
         F.expr("percentile(o_totalprice, 0.5D)").alias("med")
     )
@@ -1132,7 +1128,7 @@ GROUP BY l_returnflag
 def q94_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.skew import salted_aggregate
 
-    lin = _t(spark, sf_dir, "lineitem")
+    lin = load_table(spark, sf_dir, "lineitem")
     out = salted_aggregate(
         lin,
         keys=["l_returnflag"],
@@ -1171,7 +1167,7 @@ GROUP BY CUBE (l_returnflag, l_linestatus)
     tags=("A9", "A1"),
 )
 def q95_cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lin = _t(spark, sf_dir, "lineitem")
+    lin = load_table(spark, sf_dir, "lineitem")
     return lin.cube("l_returnflag", "l_linestatus").agg(
         F.grouping_id().cast("long").alias("lvl"),
         F.count(F.lit(1)).alias("n"),
@@ -1232,8 +1228,8 @@ FROM (SELECT * FROM r1 UNION ALL SELECT * FROM r2 UNION ALL SELECT * FROM r3) t
     tags=("dq", "P1", "P10", "U1"),
 )
 def q96_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    lineitem = _t(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    lineitem = load_table(spark, sf_dir, "lineitem")
     bad_o = orders.select(
         "o_orderkey",
         F.when(F.col("o_orderkey") % 97 == 0, F.lit(-1.0))
@@ -1312,7 +1308,7 @@ GROUP BY o_orderpriority
     tags=("incremental", "A1", "A9"),
 )
 def q97_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     cutoff = F.lit("1999-01-01").cast("timestamp")
 
     def agg(df):
@@ -1365,7 +1361,7 @@ WINDOW w AS (PARTITION BY source ORDER BY n_chars, doc_id)
     tags=("training-prep", "W2", "A13"),
 )
 def q98_curriculum_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(F.asc("n_chars"), F.asc("doc_id"))
     return docs.select(
         "doc_id",
@@ -1405,7 +1401,7 @@ SELECT 'h2_only', o_custkey FROM (SELECT * FROM h2 EXCEPT SELECT * FROM h1) t
     tags=("U1", "U3", "P10"),
 )
 def q100_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
 
     def half(lo: str, hi: str) -> DataFrame:
         return (
@@ -1453,7 +1449,7 @@ SELECT 'price_tax', ROUND(CORR(l_extendedprice, l_tax), 4) FROM lineitem
     tags=("A12", "W4"),
 )
 def q103_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lin = _t(spark, sf_dir, "lineitem")
+    lin = load_table(spark, sf_dir, "lineitem")
     agg = lin.agg(
         F.round(F.corr("l_quantity", "l_extendedprice"), 4).alias("quantity_price"),
         F.round(F.corr("l_quantity", "l_discount"), 4).alias("quantity_discount"),
@@ -1518,7 +1514,7 @@ def q136_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-depth (equal-frequency) histogram per return flag: boundary
     vector from one exact-percentile aggregate over integer cents
     (broadcast), row-local bin assignment in codegen, one keyed count."""
-    lin = _t(spark, sf_dir, "lineitem").select(
+    lin = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("vc"),
     )
@@ -1651,7 +1647,7 @@ GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
 )
 def q146_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mixed-granularity totals in one scan via GROUPING SETS."""
-    lin = _t(spark, sf_dir, "lineitem").select(
+    lin = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         "l_linestatus",
         (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev"),
@@ -1715,7 +1711,7 @@ def q149_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     log-depth step (see operators/graph.ancestor_closure)."""
     from ..operators.graph import ancestor_closure
 
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") >= 1)
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") >= 1)
     nodes = orders.select(
         F.col("o_orderkey").alias("node"),
         F.col("o_totalprice").alias("price"),
@@ -1766,7 +1762,7 @@ GROUP BY l_linenumber
     tags=("F19", "ansi-safe"),
 )
 def q161_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lin = _t(spark, sf_dir, "lineitem")
+    lin = load_table(spark, sf_dir, "lineitem")
     return lin.groupBy("l_linenumber").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(
@@ -1797,7 +1793,7 @@ FROM part
     tags=("F17", "F19", "string-funcs"),
 )
 def q162_string_library(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
         F.translate("p_name", "aeiou", "AEIOU").alias("vowels_up"),
@@ -1844,7 +1840,7 @@ def q163_boolean_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """bool_and/bool_or/count_if/max_by/min_by per priority class. The
     argmax/argmin carry explicit orderkey tie-breaks inside the ordering
     struct (rounded price first), so ties can't flip between engines."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     price_r = F.round(F.col("o_totalprice"), 4)
     return o.groupBy("o_orderpriority").agg(
         F.bool_and(F.col("o_totalprice") > 1000).alias("all_over_1k"),
@@ -1908,7 +1904,7 @@ def q171_percent_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     inclusive revenues. Iterative (closure rounds execute at build)."""
     from ..operators.graph import ancestor_closure
 
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") >= 1)
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") >= 1)
     nodes = orders.select(
         F.col("o_orderkey").alias("node"),
         F.col("o_totalprice").alias("price"),
@@ -2172,10 +2168,10 @@ def q410_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Walk counts (length ≤ 3) + min hops between nation pairs over the
     above-average trade-flow digraph, via a true recursive CTE whose
     recursive term joins the edge relation."""
-    lin = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
+    lin = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    supp = load_table(spark, sf_dir, "supplier")
     total = lin.count()  # one scalar job; reused as a plain literal
     flows = (
         lin.join(orders, lin["l_orderkey"] == orders["o_orderkey"])

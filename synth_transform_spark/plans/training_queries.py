@@ -876,7 +876,7 @@ def q192_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), " "), lambda x: x != "")
+    toks = text_analysis.tokens_raw(F.lower("text"))
     scored = docs.select(
         "doc_id",
         "source",
@@ -1416,7 +1416,7 @@ def q274_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.groupBy("source").agg(
         F.sum(
-            F.size(F.filter(F.split("text", " "), lambda t: t != ""))
+            F.size(text_analysis.tokens_raw("text"))
         ).alias("n_tokens")
     )
     frozen = toks.select(

@@ -114,6 +114,41 @@ def test_pagerank_mass_is_conserved_without_dangling_nodes(spark):
     assert abs(total - 1.0) < 1e-9
 
 
+def test_weighted_pagerank_with_unit_weights_equals_pagerank(spark):
+    # Both operators run the same round loop and differ only in the
+    # per-edge contribution: rank/od versus rank*round(w/W, 6). With unit
+    # weights and out-degrees of 1, 2 or 4 the 6dp shares are exact binary
+    # fractions, and with N = 8 and d = 0.5 every rank is a short dyadic
+    # rational, so the two must agree bit for bit whatever the sum order.
+    from synth_transform_spark.operators.graph import pagerank, weighted_pagerank
+
+    adj = {
+        0: [1, 2, 3, 4],
+        1: [0, 5],
+        2: [6],
+        3: [7, 0],
+        4: [5],
+        5: [6, 7, 0, 1],
+        6: [2],
+        7: [3, 4],
+    }
+    rows = [(s, d, 1.0) for s, ds in adj.items() for d in ds]
+    edges = spark.createDataFrame(rows, ["s", "d", "w"])
+    plain = {
+        r.node: r.rank
+        for r in pagerank(edges, "s", "d", n_iter=4, damping=0.5).collect()
+    }
+    weighted = {
+        r.node: r.rank
+        for r in weighted_pagerank(
+            edges, "s", "d", "w", n_iter=4, damping=0.5
+        ).collect()
+    }
+    assert len(plain) == 8
+    assert len(set(plain.values())) > 1  # the graph is not rank-uniform
+    assert weighted == plain
+
+
 def test_kcore_converged_at_shipped_rounds(spark):
     """q135 ships n_rounds=4; peeling must have reached fixpoint on the
     shipped corpus (round 5 changes nothing) — otherwise the fixed-round

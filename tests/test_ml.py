@@ -39,20 +39,6 @@ def test_tokeniser_matches_reference_regex(spark):
     assert toks == ["hello", "world", "bb", "cc"]
 
 
-def test_pca_project_preserves_rows_and_orders_variance(spark):
-    from synth_transform_spark.operators.ml import pca_project
-    from synth_transform_spark.sources.readers import load_table
-    import numpy as np
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    out = pca_project(emb, k=2).toPandas()
-    assert len(out) == emb.count()
-    assert all(len(p) == 2 for p in out.pc)
-    # PC1 must carry at least as much variance as PC2 (eigenvalue ordering)
-    mat = np.array(out.pc.tolist())
-    assert mat[:, 0].var() >= mat[:, 1].var()
-
-
 def test_deterministic_pca_scalar_output_and_variance_order(spark):
     from synth_transform_spark.operators.ml import deterministic_pca_project
     from synth_transform_spark.sources.readers import load_table

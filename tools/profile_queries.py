@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Per-query measurement harness for optimization rounds (guide §1).
 
-Two modes, both labelled via setJobDescription so the UI attributes work:
+Three modes, labelled via setJobDescription so the UI attributes work:
 
   explain: write ``.explain("formatted")`` for each named query to
            ``--out-dir/<query>_<tag>.txt`` (the plan evidence the round
@@ -10,10 +10,17 @@ Two modes, both labelled via setJobDescription so the UI attributes work:
            (guide §1.4 — forces every column of every row, so projection
            wins are visible; a bare count() lets the optimizer prune) and
            print per-query best/all times as one JSON line.
+  fingerprint: build each named query (or the whole registry with
+           ``--all``) twice and print one JSON line ``{query: fingerprint}``
+           using ``bench.plan_fingerprint``; a query whose two builds give
+           different fingerprints is reported as ``"unstable"``, one that
+           fails both builds as ``"error"``. Diff two such lines to see which
+           plans a change moved.
 
 Usage:
   python tools/profile_queries.py explain --tag before --out-dir plans/r11 q186_bpe_merges ...
   python tools/profile_queries.py time --reps 2 q186_bpe_merges ...
+  SPARK_GRAFT_SF_DIR=$TESTDATA/sf0.001 python tools/profile_queries.py fingerprint --all
 
 Reads $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) like bench.py.
 Iterative queries (BPE, BFS, closure) execute jobs while BUILDING the
@@ -34,8 +41,9 @@ import time
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("mode", choices=["explain", "time"])
-    ap.add_argument("queries", nargs="+")
+    ap.add_argument("mode", choices=["explain", "time", "fingerprint"])
+    ap.add_argument("queries", nargs="*")
+    ap.add_argument("--all", action="store_true", help="every registered query")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--out-dir", default="plans/r11")
     ap.add_argument("--reps", type=int, default=2)
@@ -51,8 +59,37 @@ def main() -> int:
     from synth_transform_spark.session import get_spark, silence_bounded_window_warnings
     from synth_transform_spark.caching import release_cached
 
+    if args.all:
+        args.queries = sorted(REGISTRY)
+    if not args.queries:
+        ap.error("name at least one query, or pass --all")
+    unknown = [name for name in args.queries if name not in REGISTRY]
+    if unknown:
+        ap.error(f"unknown queries: {', '.join(unknown)}")
+
     spark = get_spark("synth-transform-profile")
     silence_bounded_window_warnings(spark)
+
+    if args.mode == "fingerprint":
+        from bench import plan_fingerprint
+
+        out = {}
+        for name in args.queries:
+            spark.sparkContext.setJobDescription(f"fingerprint:{name}")
+            prints = set()
+            for _ in range(2):
+                try:
+                    prints.add(plan_fingerprint(REGISTRY[name].spark(spark, sf_dir)))
+                except Exception as ex:
+                    print(f"# {name} failed: {ex}", file=sys.stderr)
+                    prints.add("error")
+                finally:
+                    release_cached()
+                    spark.catalog.clearCache()
+            out[name] = prints.pop() if len(prints) == 1 else "unstable"
+            print(f"# {name}: {out[name]}", file=sys.stderr)
+        print(json.dumps(out, sort_keys=True))
+        return 0
 
     if args.mode == "explain":
         os.makedirs(args.out_dir, exist_ok=True)
